@@ -111,8 +111,9 @@ object CorpusStore {
     */
   val BucketExprVersion = 1
 
-  /** The store's physical bucket layout — PERSISTED PER SNAPSHOT in a
-    * `_layout/v{N}` sidecar, never a compile-time constant. Every tick and
+  /** The store's physical bucket layout — PERSISTED PER SNAPSHOT as the
+    * `#meta:layout` line of every commit ([[ManifestTable.commitMeta]]),
+    * atomic with the snapshot, never a compile-time constant. Every tick and
     * pruned read resolves the layout from the store itself, so a reader
     * and the writer that laid the directories out can never disagree;
     * changing the constants of a live store is [[compact]] with
@@ -152,31 +153,24 @@ object CorpusStore {
   private[graft] def shingleBucket(id: Column, l: StoreLayout): Column =
     pmod(id, lit(l.shingleBuckets)).cast("int")
 
-  // ---- layout sidecar: one tiny JSON file per committed snapshot -------
+  // ---- layout: the commit's #meta:layout, or a staged creation choice ---
 
   private def layoutDir(root: String) =
     new org.apache.hadoop.fs.Path(s"$root/_layout")
-  private def layoutPath(root: String, version: Long) =
-    new org.apache.hadoop.fs.Path(s"$root/_layout/v$version")
+  private def stagedLayoutPath(root: String) =
+    new org.apache.hadoop.fs.Path(s"$root/_layout/v1")
 
-  /** Write the layout sidecar for `version`. Runs BEFORE the manifest
-    * commit (a committed snapshot must always find its sidecar; an orphan
-    * from a crashed commit is simply overwritten by the next writer at the
-    * same version). The sidecar is the LEGACY/staging form: every commit
-    * also carries its layout as `#meta:layout=` INSIDE the manifest
-    * ([[ManifestTable.commitMeta]]), which readers prefer — the meta is
-    * atomic with the commit, so a racing loser that overwrites this
-    * sidecar after the winner committed ([[ManifestTable
-    * .CommitConflictException]] cleanup paths) can no longer corrupt the
-    * committed version's governing layout. The sidecar remains the ONLY
-    * channel for the pre-creation staged choice (a zero-commit creation
-    * tick's v1), where no manifest exists to carry meta.
+  /** Stage the explicit layout choice of a creation tick that committed
+    * nothing. Before the first commit no manifest exists to carry
+    * `#meta:layout`, so this `_layout/v1` file is the one channel for that
+    * choice: it is read only while the store has no version, and the
+    * creating commit deletes it.
     */
   private def writeLayoutFor(spark: SparkSession, root: String,
-                             version: Long, l: StoreLayout): Unit = {
+                             l: StoreLayout): Unit = {
     val fs = fsOf(spark, root)
     fs.mkdirs(layoutDir(root))
-    val out = fs.create(layoutPath(root, version), true)
+    val out = fs.create(stagedLayoutPath(root), true)
     try out.write(l.render.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
@@ -184,7 +178,7 @@ object CorpusStore {
   private[graft] def parseLayout(s: String, where: String): StoreLayout = {
     def field(k: String): Int = {
       val m = s""""$k"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(s)
-      require(m.nonEmpty, s"layout sidecar $where is missing \"$k\": $s")
+      require(m.nonEmpty, s"layout $where is missing \"$k\": $s")
       m.get.group(1).toInt
     }
     val l = StoreLayout(field("md5Buckets"), field("bandValBuckets"),
@@ -198,11 +192,11 @@ object CorpusStore {
     l
   }
 
-  /** Layout sidecar of snapshot `version`, if one was written. */
-  private[graft] def readLayoutAt(spark: SparkSession, root: String,
-                                  version: Long): Option[StoreLayout] = {
+  /** The creation choice a zero-commit tick staged, if any. */
+  private def stagedLayout(spark: SparkSession,
+                           root: String): Option[StoreLayout] = {
     val fs = fsOf(spark, root)
-    val p = layoutPath(root, version)
+    val p = stagedLayoutPath(root)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
@@ -212,49 +206,31 @@ object CorpusStore {
     }
   }
 
-  /** The governing layout sidecar at-or-before `version`. Layouts change
-    * only at commits that write a sidecar, and every commit writes one for
-    * its own version, so this normally resolves `version` exactly; the
-    * walk-back covers a current-version sidecar raced away by concurrent
-    * version-dir pruning. Housekeeping is single-writer by contract, but
-    * a violated contract must degrade to the previous retained version's
-    * IDENTICAL layout (layouts only change at compact time, which is
-    * never concurrent) — not to a silent [[DefaultLayout]] reversion,
-    * which on a rebucketed store means wrong dirs and missed duplicates.
+  /** The layout recorded in `version`'s own commit meta. Every corpus-store
+    * commit writes one, so a committed version without it was not written
+    * by this store's format: throw rather than guess a layout, which on a
+    * rebucketed store would mean wrong dirs and missed duplicates.
     */
-  private def latestLayoutAt(spark: SparkSession, root: String,
-                             version: Long): Option[StoreLayout] =
-    metaLayoutAt(spark, root, version)
-      .orElse(readLayoutAt(spark, root, version))
-      .orElse {
-        ManifestTable.versionDirs(fsOf(spark, root), layoutDir(root))
-          .filter(_._1 < version).lastOption
-          .flatMap { case (v, _) => readLayoutAt(spark, root, v) }
-      }
-
-  /** The layout recorded in `version`'s own commit meta — the atomic,
-    * clobber-proof channel every commit writes; absent only for pre-meta
-    * stores (whose sidecars remain authoritative).
-    */
-  private def metaLayoutAt(spark: SparkSession, root: String,
-                           version: Long): Option[StoreLayout] =
-    ManifestTable.commitMeta(spark, root, version).get("layout")
-      .map(parseLayout(_, s"$root manifest v$version #meta:layout"))
+  private def committedLayout(spark: SparkSession, root: String,
+                              version: Long): StoreLayout =
+    ManifestTable.commitMeta(spark, root, version).get("layout") match {
+      case Some(s) => parseLayout(s, s"$root manifest v$version #meta:layout")
+      case None => throw new IllegalStateException(
+        s"store at $root has no #meta:layout at committed version $version " +
+          "— every corpus-store commit records its layout, so this root " +
+          "was not written by a corpus store of this format")
+    }
 
   /** The layout governing the CURRENT snapshot — what every tick and
-    * pruned read resolves (never a compile-time constant). A store from
-    * before the sidecar existed was necessarily written under
-    * [[DefaultLayout]] (the constants were fixed then), so that is the
-    * documented legacy fallback; a sidecar with a foreign expression
-    * version throws (see [[BucketExprVersion]]).
+    * pruned read resolves (never a compile-time constant). Before the first
+    * commit, a staged creation choice (see [[writeLayoutFor]]) or else
+    * [[DefaultLayout]] governs the creation still to come. A foreign
+    * expression version throws (see [[BucketExprVersion]]).
     */
   def layoutOf(spark: SparkSession, root: String): StoreLayout =
     ManifestTable.currentVersion(spark, root) match {
-      // not yet created: a staged v1 sidecar (a zero-commit creation
-      // tick's explicit choice — see the tick's zero-commit path) governs
-      // the creation still to come
-      case None    => readLayoutAt(spark, root, 1).getOrElse(DefaultLayout)
-      case Some(v) => latestLayoutAt(spark, root, v).getOrElse(DefaultLayout)
+      case None    => stagedLayout(spark, root).getOrElse(DefaultLayout)
+      case Some(v) => committedLayout(spark, root, v)
     }
 
   /** The layout a tick must use: the persisted one when the store exists;
@@ -267,32 +243,31 @@ object CorpusStore {
     ifNew.foreach(requireCurrentExprVersion(_, "tick(layoutIfNew)"))
     ManifestTable.currentVersion(spark, root) match {
       case Some(v) =>
-        val persisted = latestLayoutAt(spark, root, v).getOrElse(DefaultLayout)
+        val persisted = committedLayout(spark, root, v)
         ifNew.foreach(l => require(l == persisted,
           s"store at $root is laid out as $persisted but the tick asserted " +
             s"$l; changing a live store's layout is compact(rebucketTo = ...)"))
         persisted
       // not yet created: the most recent EXPLICIT choice wins — the
-      // caller's, else a staged v1 sidecar from an earlier creation
-      // attempt (a zero-commit tick's layoutIfNew, or a crashed first
-      // commit). There is no data a layout change could corrupt before
-      // the first commit, so last-writer-wins is safe here and only here.
-      case None => ifNew.orElse(readLayoutAt(spark, root, 1))
+      // caller's, else a choice staged by an earlier zero-commit creation
+      // tick. There is no data a layout change could corrupt before the
+      // first commit, so last-writer-wins is safe here and only here.
+      case None => ifNew.orElse(stagedLayout(spark, root))
         .getOrElse(DefaultLayout)
     }
   }
 
   /** A CALLER-supplied layout (tick's `layoutIfNew`, compact's
     * `rebucketTo`) must carry this binary's expression version — parseLayout
-    * already fails foreign sidecars at read, but without this check a
-    * caller could PERSIST a sidecar labeled with a version the expressions
+    * already fails foreign layouts at read, but without this check a
+    * caller could PERSIST a layout labeled with a version the expressions
     * don't match, bricking the store for every matching reader.
     */
   private def requireCurrentExprVersion(l: StoreLayout, what: String): Unit =
     require(l.exprVersion == BucketExprVersion,
       s"$what carries bucket-expression version ${l.exprVersion}, but this " +
         s"binary computes version $BucketExprVersion; persisting that " +
-        "sidecar would mislabel the store's directories")
+        "layout would mislabel the store's directories")
 
   private val docSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("lang", StringType),
@@ -690,8 +665,8 @@ object CorpusStore {
     * store; on an existing store the persisted layout governs, and
     * asserting a different one here throws (see [[StoreLayout]]). The
     * choice survives even if this tick's documents all drop (it is staged
-    * as the v1 sidecar the first real commit adopts), so creation ticks
-    * need not repeat it.
+    * in `_layout/v1` for the first real commit to adopt), so creation
+    * ticks need not repeat it.
     */
   def tick(rawBatch: DataFrame, root: String,
            tickId: Option[String] = None,
@@ -955,12 +930,12 @@ object CorpusStore {
       val version =
         if (nKept == 0L && nTomb == 0L) {
           // a creation tick whose documents ALL dropped still records its
-          // explicit layout choice (as the staged v1 sidecar the first
-          // real commit will adopt) — otherwise a later tick without
-          // layoutIfNew would silently create the store under
-          // DefaultLayout, defeating the creation-time assertion
+          // explicit layout choice (staged for the first real commit to
+          // adopt) — otherwise a later tick without layoutIfNew would
+          // silently create the store under DefaultLayout, defeating the
+          // creation-time assertion
           if (prev.isEmpty && layoutIfNew.isDefined)
-            writeLayoutFor(spark, root, 1L, layout)
+            writeLayoutFor(spark, root, layout)
           prev.getOrElse(0L)
         }
         else {
@@ -1017,12 +992,10 @@ object CorpusStore {
               s"published=${byKind.map { case (k, f) => s"$k:${f.size}" }
                 .mkString(",")}) — staged files vanished before publish; " +
               "is another writer's housekeeping running against this store?")
-          // bloom + layout sidecars ride ahead of the commit: a committed
-          // snapshot always finds them; a crash right here leaves orphans
-          // vacuum reclaims (blooms) or the next committer at this version
-          // overwrites (layout)
+          // bloom sidecars ride ahead of the commit: a committed snapshot
+          // always finds them; a crash right here leaves orphans vacuum
+          // reclaims. The layout rides the commit itself (#meta:layout)
           writeKindBlooms(spark, root, byKind)
-          writeLayoutFor(spark, root, prev.getOrElse(0L) + 1, layout)
           val v =
             try ManifestTable.commitReplace(spark, root, Seq.empty,
               byKind.flatMap(_._2),
@@ -1050,8 +1023,9 @@ object CorpusStore {
           // the deep orphan sweep (a recursive listing) runs at compact
           // time, not once per batch
           ManifestTable.vacuum(spark, root, retainSnapshots, deep = false)
-          ManifestTable.pruneVersionDirs(fsOf(spark, root), layoutDir(root),
-            ManifestTable.versions(spark, root).toSet)
+          // the creating commit's meta now carries the layout a zero-commit
+          // tick may have staged; the staged copy is never read again
+          if (prev.isEmpty) fsOf(spark, root).delete(layoutDir(root), true)
           v
         }
       val keeperIds =
@@ -1152,8 +1126,8 @@ object CorpusStore {
     *
     * Rebucket mode (`rebucketTo = Some(layout)`): the whole store rewrites
     * in one atomic commit with every `p_b` RECOMPUTED from the row's own
-    * key columns under the new layout, and the `_layout` sidecar flips
-    * with the same version — the supported way to raise the bucket
+    * key columns under the new layout, recorded in the same commit's
+    * `#meta:layout` — the supported way to raise the bucket
     * constants of a live store (e.g. 16 → production 4096). Readers see
     * the old layout+files or the new, never a mix.
     *
@@ -1253,17 +1227,12 @@ object CorpusStore {
     val nRewrittenIn = results.map(_._3).sum
     if (replacedDirs.isEmpty && !rebucket)
       return (live.length.toLong, live.length.toLong) // nothing fragmented
-    // layout sidecar flips with the SAME commit version (rides ahead of
-    // the atomic rename, like the tick's)
-    writeLayoutFor(spark, root, prev.get + 1, target)
     ManifestTable.commitReplace(spark, root,
       if (rebucket) Seq("") else replacedDirs, added,
       meta = Map("layout" -> target.render))
     // deep on purpose: compaction is the store's maintenance pass, so it
     // also sweeps crash orphans the per-tick cheap vacuums leave behind
     ManifestTable.vacuum(spark, root, deep = true)
-    ManifestTable.pruneVersionDirs(fs, layoutDir(root),
-      ManifestTable.versions(spark, root).toSet)
     (live.length.toLong, (live.length - nRewrittenIn + added.length).toLong)
   }
 
@@ -1441,14 +1410,11 @@ object CorpusStore {
         }
       }
       writeKindBlooms(spark, root, byKind)
-      writeLayoutFor(spark, root, prev + 1, layout)
       val removed = (docVictimFiles ++ shVictimFiles ++ bandVictimFiles).distinct
       val v = ManifestTable.commitRewriteFiles(spark, root, removed,
         byKind.flatMap(_._2).map(ManifestTable.FileEntry(_)),
         meta = Map("layout" -> layout.render))
       ManifestTable.vacuum(spark, root, retainSnapshots, deep = false)
-      ManifestTable.pruneVersionDirs(fsOf(spark, root), layoutDir(root),
-        ManifestTable.versions(spark, root).toSet)
       ForgetReport(v, victimIds.size.toLong, newTombs.size.toLong,
         removed.size)
     } finally {

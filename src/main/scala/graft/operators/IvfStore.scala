@@ -24,13 +24,12 @@ import org.apache.spark.sql.functions._
   * commits, mini-batch refresh), and MODEL/POSTINGS PAIRING is explicit:
   * each postings snapshot records the model version its assignments were
   * computed under — as `#meta:` lines INSIDE the postings manifest commit
-  * ([[ManifestTable.commitMeta]]), atomic with the snapshot, with a
-  * read-side fallback to the legacy pre-commit `_model/v{N}` parquet
-  * sidecar of older stores — and every search resolves
-  * ONE postings version and probes with exactly that version's centroids
-  * — a search racing a rebuild can never probe new-model cells against
-  * old-model postings (cell ids mean different voronoi regions across
-  * retrains; the mispairing would be silently wrong, not an error).
+  * ([[ManifestTable.commitMeta]]), atomic with the snapshot — and every
+  * search resolves ONE postings version and probes with exactly that
+  * version's centroids — a search racing a rebuild can never probe
+  * new-model cells against old-model postings (cell ids mean different
+  * voronoi regions across retrains; the mispairing would be silently
+  * wrong, not an error).
   *
   * Search output is byte-identical to [[CentroidStore.annIvf]] /
   * [[Similarity.annIvf]] under the same model (spec-asserted): the probe
@@ -42,8 +41,6 @@ object IvfStore {
 
   private def modelRoot(root: String) = s"$root/model"
   private def postingsRoot(root: String) = s"$root/postings"
-  private def modelRefPath(root: String, postingsVersion: Long) =
-    s"${postingsRoot(root)}/_model/v$postingsVersion"
 
   /** Train (via the nested [[CentroidStore]]) and materialize the postings
     * for a corpus snapshot. One normalization pass feeds both training and
@@ -134,10 +131,9 @@ object IvfStore {
   }
 
   /** Shared postings commit: stage the cell-partitioned files, attach
-    * vec_id stats (so the self-query fetch file-prunes), record the model
-    * version this snapshot's assignments used BEFORE the commit (the
-    * single-writer version-pairing discipline of [[QuantStore.build]]),
-    * and commit — replace-all for a build, append for a tick.
+    * vec_id stats (so the self-query fetch file-prunes), and commit —
+    * replace-all for a build, append for a tick — with the model version
+    * this snapshot's assignments used in the commit's own meta.
     */
   private def commitPostings(spark: SparkSession, root: String,
                              postings: DataFrame, modelVersion: Long,
@@ -163,12 +159,6 @@ object IvfStore {
     require(v == prev + 1 && modelVersionOf(spark, root, v) == modelVersion,
       s"concurrent build detected: postings v$v not paired with model v$modelVersion")
     ManifestTable.vacuum(spark, postingsRoot(root))
-    // drop model refs of vacuumed postings versions (QuantStore.pruneBounds)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ManifestTable.pruneVersionDirs(fs,
-      new org.apache.hadoop.fs.Path(s"${postingsRoot(root)}/_model"),
-      ManifestTable.versions(spark, postingsRoot(root)).toSet)
     v
   }
 
@@ -191,7 +181,7 @@ object IvfStore {
     * ([[ManifestTable.commitRewriteFiles]]), O(touched files), never a
     * postings scan or an index rebuild. The new snapshot pairs with the
     * SAME model version (a pure row removal changes no assignment; the
-    * `_model` sidecar carries the ref forward). The centroids themselves
+    * purge commit's meta carries the ref forward). The centroids themselves
     * are untouched: a k-means mean over many vectors is an aggregate, not
     * retrievable content, and the next refresh/build washes the purged
     * vector's residual out. Physical deletion follows the usual retention
@@ -266,13 +256,25 @@ object IvfStore {
       require(v == pv + 1 && modelVersionOf(spark, root, v) == mv,
         s"concurrent writer detected: purge committed v$v, planned ${pv + 1}")
       ManifestTable.vacuum(spark, pr)
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      ManifestTable.pruneVersionDirs(fs,
-        new org.apache.hadoop.fs.Path(s"$pr/_model"),
-        ManifestTable.versions(spark, pr).toSet)
       IvfForgetReport(v, nPurged, victimFiles.size)
     } finally touched.unpersist()
+  }
+
+  /** The `#meta:` lines of postings snapshot `postingsVersion`. Every
+    * postings commit records its `model_version`; one without it was not
+    * written by this store's format, and probing it under a guessed model
+    * would be silently wrong, so it throws.
+    */
+  private def postingsMeta(spark: SparkSession, root: String,
+                           postingsVersion: Long): Map[String, String] = {
+    val meta = ManifestTable.commitMeta(spark, postingsRoot(root),
+      postingsVersion)
+    if (!meta.contains("model_version"))
+      throw new IllegalStateException(
+        s"IVF postings at ${postingsRoot(root)} v$postingsVersion carry no " +
+          "model_version meta — every postings commit records its model " +
+          "pairing, so this root was not written by an IvfStore of this format")
+    meta
   }
 
   /** The model version postings snapshot `postingsVersion` was assigned
@@ -280,31 +282,15 @@ object IvfStore {
     */
   def modelVersionOf(spark: SparkSession, root: String,
                      postingsVersion: Long): Long =
-    ManifestTable.commitMeta(spark, postingsRoot(root), postingsVersion)
-      .get("model_version").map(_.toLong)
-      .getOrElse( // pre-meta store: the legacy `_model/v{N}` sidecar
-        spark.read.parquet(modelRefPath(root, postingsVersion))
-          .select(col("model_version")).collect().head.getLong(0))
+    postingsMeta(spark, root, postingsVersion)("model_version").toLong
 
   /** The tick id postings snapshot `postingsVersion` was committed under,
-    * if any — the [[ingestBatch]] replay marker. Tolerates pre-tick
-    * sidecars (no `tick_id` column).
+    * if any — the [[ingestBatch]] replay marker (absent = an untracked
+    * commit, e.g. a purge).
     */
   private def postingsTickOf(spark: SparkSession, root: String,
-                             postingsVersion: Long): Option[String] = {
-    val meta = ManifestTable.commitMeta(spark, postingsRoot(root),
-      postingsVersion)
-    // a meta-bearing postings commit always records its model version, so
-    // its presence marks the commit new-style: tick_id comes from the meta
-    // (absent = an untracked commit, e.g. a purge). Only pre-meta commits
-    // fall back to the legacy sidecar.
-    if (meta.contains("model_version")) meta.get("tick_id")
-    else {
-      val ref = spark.read.parquet(modelRefPath(root, postingsVersion))
-      if (!ref.columns.contains("tick_id")) None
-      else Option(ref.select(col("tick_id")).collect().head.getString(0))
-    }
-  }
+                             postingsVersion: Long): Option[String] =
+    postingsMeta(spark, root, postingsVersion).get("tick_id")
 
   /** Whether ANY of `ids` is already posted — the replay backstop for
     * composed platform ticks ([[CorpusStore.tickWithIndex]]): a tick's

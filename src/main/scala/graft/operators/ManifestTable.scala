@@ -330,9 +330,9 @@ object ManifestTable {
   }
 
   /** `v{N}` version-directory children of `dir` — the versioned-sidecar
-    * layout every model store shares ([[CentroidStore]] model versions,
-    * [[QuantStore]] `_bounds`, [[IvfStore]] postings `_model` refs) —
-    * ascending by N. One parser, so the stores cannot drift.
+    * layout the model stores share ([[CentroidStore]] model versions,
+    * [[QuantStore]] `_bounds`, [[CorpusStore]] `_models`) — ascending by
+    * N. One parser, so the stores cannot drift.
     */
   private[operators] def versionDirs(fs: FileSystem, dir: Path): Seq[(Long, Path)] =
     if (!fs.exists(dir)) Seq.empty
@@ -376,8 +376,8 @@ object ManifestTable {
     * conditional [[commitPublisher]] install, the metadata is ATOMIC with
     * the snapshot — the mechanism version-paired state (e.g. [[IvfStore]]'s
     * model↔postings ref) uses so no separately-written sidecar can be
-    * clobbered by a racing committer. Commits that wrote no meta (and
-    * pre-meta manifests) yield an empty map.
+    * clobbered by a racing committer. Commits that wrote no meta yield an
+    * empty map.
     */
   def commitMeta(spark: SparkSession, root: String,
                  version: Long): Map[String, String] =
@@ -392,8 +392,8 @@ object ManifestTable {
 
   /** The commit token of `version`'s manifest header, by reading ONLY the
     * first line — the cheap identity probe [[entriesOf]] validates its
-    * cache with (one small ranged read, not a full manifest parse).
-    * Pre-token manifests (or a non-token first line) yield None.
+    * cache with (one small ranged read, not a full manifest parse). A
+    * non-token first line yields None.
     */
   private def headerToken(spark: SparkSession, root: String, version: Long): Option[String] = {
     val fs = fsOf(spark, root)
@@ -420,13 +420,12 @@ object ManifestTable {
     * (which legitimately restarts version numbers) can never be served the
     * old root's listing: the recreated manifest carries a fresh token even
     * when its length and second-granularity mtime happen to collide with
-    * the old one's. Pre-token manifests fall back to (length, mtime) stat
-    * validation, which is exact up to the filesystem's mtime granularity.
+    * the old one's. A manifest whose first line is no token (every commit
+    * writes one; only hand-written files lack it) is read but never cached:
+    * nothing could validate a hit on it.
     */
   private val EntryCacheMax = 8
-  private case class CachedEntries(len: Long, mtime: Long,
-                                   token: Option[String],
-                                   entries: Seq[FileEntry])
+  private case class CachedEntries(token: String, entries: Seq[FileEntry])
   private val entryCache =
     new java.util.LinkedHashMap[String, CachedEntries](16, 0.75f, true) {
       override def removeEldestEntry(
@@ -437,28 +436,20 @@ object ManifestTable {
   /** Data files of snapshot `version` with their pruning stats. */
   def entriesOf(spark: SparkSession, root: String, version: Long): Seq[FileEntry] = {
     val key = s"$root@$version"
+    // the token alone decides: it is unique per commit, so a match proves
+    // this is byte-for-byte the manifest that was parsed (a validation
+    // failure of any kind just falls through to a re-read)
     val cached = entryCache.synchronized(Option(entryCache.get(key)))
       .filter { c =>
-        c.token match {
-          // token alone decides: it is unique per commit, so a match proves
-          // this is byte-for-byte the manifest that was parsed (a validation
-          // failure of any kind just falls through to a re-read)
-          case Some(t) =>
-            try headerToken(spark, root, version).contains(t)
-            catch { case scala.util.control.NonFatal(_) => false }
-          case None =>
-            val st = fsOf(spark, root).getFileStatus(manifestPath(root, version))
-            c.len == st.getLen && c.mtime == st.getModificationTime
-        }
+        try headerToken(spark, root, version).contains(c.token)
+        catch { case scala.util.control.NonFatal(_) => false }
       }
     cached.map(_.entries).getOrElse {
-      val st = fsOf(spark, root).getFileStatus(manifestPath(root, version))
       val lines = allLinesOf(spark, root, version)
-      val token = lines.headOption.filter(_.startsWith(TokenPrefix))
       val parsed = lines.filterNot(_.startsWith("#")).map(parseEntry)
-      entryCache.synchronized(
-        entryCache.put(key,
-          CachedEntries(st.getLen, st.getModificationTime, token, parsed)))
+      lines.headOption.filter(_.startsWith(TokenPrefix)).foreach { t =>
+        entryCache.synchronized(entryCache.put(key, CachedEntries(t, parsed)))
+      }
       parsed
     }
   }

@@ -8,7 +8,7 @@ import graft.operators.CorpusStore.StoreLayout
 
 /** The store's physical-layout machinery: the rebucket migration, the
   * incremental (fragmented-buckets-only) compaction, and the fail-loud
-  * paths of the `_layout` sidecar. These are the proofs behind the
+  * paths of the commit's `#meta:layout`. These are the proofs behind the
   * layout-evolution story: a live store's bucket counts can be raised
   * atomically without changing a row of content or a bit of dedup state,
   * and every way a reader and writer could disagree about the layout is
@@ -21,34 +21,10 @@ import graft.operators.CorpusStore.StoreLayout
 // excluded from plain `sbt test` (multi-minute store-integration runtime
 // blew the verify budget — round-15 VERDICT item 1); `sbt slowTest` runs it
 @graft.tags.Slow
-class CorpusStoreLayoutSpec extends SparkSpec {
+class CorpusStoreLayoutSpec extends SparkSpec with StoreKinds {
 
   private def sameRows(a: DataFrame, b: DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
-
-  /** All live rows of one kind, WITH the p_b partition column recovered. */
-  private def kindRows(root: String, kind: String): Option[DataFrame] = {
-    val dd = ManifestTable.dataDir(root)
-    val files = CorpusStore.kindFiles(spark, root, kind)
-    if (files.isEmpty) None
-    else Some(spark.read.option("basePath", dd)
-      .parquet(files.map(f => s"$dd/$f"): _*))
-  }
-
-  private val KindCols = Map(
-    "doc" -> Seq("doc_id", "lang", "source", "text", "text_md5", "tick"),
-    "sh" -> Seq("doc_id", "shingles"),
-    "band" -> Seq("doc_id", "band_id", "band_val"),
-    "tomb" -> Seq("text_md5"))
-
-  /** The kind's bucket expression under `l` — the read-side mirror of the
-    * write-side `p_b` derivation in tick/compact.
-    */
-  private def bucketExpr(kind: String, l: StoreLayout) = kind match {
-    case "doc" | "tomb" => CorpusStore.md5Bucket(col("text_md5"), l)
-    case "band" => CorpusStore.bandBucket(col("band_id"), col("band_val"), l)
-    case "sh"   => CorpusStore.shingleBucket(col("doc_id"), l)
-  }
 
   test("rebucket migration: rows, dedup state, and replay survive; dirs " +
     "agree with the new layout; old-layout assertions throw") {
@@ -69,12 +45,12 @@ class CorpusStoreLayoutSpec extends SparkSpec {
       assert(CorpusStore.layoutOf(spark, root) == layoutA,
         "creation layout did not persist")
 
-      // the migration: one atomic commit recomputes every p_b and flips
-      // the sidecar at the same version
+      // the migration: one atomic commit recomputes every p_b and records
+      // the new layout in its own meta
       val vBefore = ManifestTable.currentVersion(spark, root).get
       CorpusStore.compact(spark, root, rebucketTo = Some(layoutB))
       assert(CorpusStore.layoutOf(spark, root) == layoutB,
-        "rebucket did not flip the layout sidecar")
+        "rebucket did not flip the committed layout")
       assert(ManifestTable.currentVersion(spark, root).contains(vBefore + 1))
 
       // (a) every kind's ROWS are byte-stable vs the never-rebucketed twin,
@@ -222,9 +198,8 @@ class CorpusStoreLayoutSpec extends SparkSpec {
     } finally spark.catalog.clearCache()
   }
 
-  test("layout sidecar fail-loud: foreign expression version throws at " +
-    "open; a foreign-format root refuses to read; the legacy fallback is " +
-    "pinned to 16/16/16") {
+  test("layout fail-loud: foreign expression version throws at open; a " +
+    "foreign-format root refuses to read") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val root = java.nio.file.Files.createTempDirectory("graft_laybad").toString
     try {
@@ -257,31 +232,6 @@ class CorpusStoreLayoutSpec extends SparkSpec {
       assert(ex.getMessage.contains("bucket-expression version")
         && ex.getMessage.contains("rebucket"), ex.getMessage)
 
-      // PRE-META store (the legacy form): strip the meta line entirely —
-      // resolution falls back to the `_layout/v{N}` sidecar, whose foreign
-      // expression version must throw the same way
-      rewrite(manifest)(_.split("\n")
-        .filterNot(_.startsWith("#meta:")).mkString("\n") + "\n")
-      val sidecar = new org.apache.hadoop.fs.Path(s"$root/_layout/v$v")
-      rewrite(sidecar)(
-        _.replace("\"exprVersion\":1", "\"exprVersion\":2"))
-      val ex1b = intercept[IllegalStateException] {
-        CorpusStore.layoutOf(spark, root)
-      }
-      assert(ex1b.getMessage.contains("bucket-expression version"),
-        ex1b.getMessage)
-
-      // missing sidecar on a pre-meta store = a pre-sidecar store,
-      // necessarily written at the then-constant 16/16/16. PINNED: if
-      // DefaultLayout ever changes, this assertion is the tripwire that
-      // the legacy fallback would silently corrupt old stores.
-      hfs.delete(new org.apache.hadoop.fs.Path(s"$root/_layout"), true)
-      assert(CorpusStore.DefaultLayout == StoreLayout(16, 16, 16),
-        "DefaultLayout changed: pre-sidecar stores were written at " +
-          "16/16/16 and the legacy fallback would now mis-prune them — " +
-          "gate the new default behind a sidecar-only path first")
-      assert(CorpusStore.layoutOf(spark, root) == StoreLayout(16, 16, 16))
-
       // a root whose live files carry no p_kind= prefix is NOT a corpus
       // store: reading it as an empty one would re-ingest everything
       import spark.implicits._
@@ -299,7 +249,7 @@ class CorpusStoreLayoutSpec extends SparkSpec {
   }
 
   test("caller-supplied layouts must carry this binary's expression " +
-    "version — a mislabeled sidecar must never persist") {
+    "version — a mislabeled layout must never persist") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val bad = StoreLayout(8, 8, 8, exprVersion = 2)
     val root = java.nio.file.Files.createTempDirectory("graft_layver").toString
@@ -321,45 +271,6 @@ class CorpusStoreLayoutSpec extends SparkSpec {
     } finally spark.catalog.clearCache()
   }
 
-  test("a creation layout chosen by a zero-commit tick is not lost") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val chosen = StoreLayout(4, 4, 4)
-    val root = java.nio.file.Files.createTempDirectory("graft_layzero").toString
-    try {
-      // every document fails the quality gate: the tick processes, drops
-      // all, and commits NOTHING — but its explicit layout choice must
-      // survive as the staged v1 sidecar
-      val r0 = CorpusStore.tick(docs.filter(col("doc_id") % 7 === 0), root,
-        tickId = Some("w0"), minQuality = 1e9, layoutIfNew = Some(chosen))
-      assert(r0.nKept == 0L
-        && ManifestTable.currentVersion(spark, root).isEmpty,
-        s"construction failed: the creation tick committed: $r0")
-      assert(CorpusStore.layoutOf(spark, root) == chosen,
-        "zero-commit creation choice not visible to layoutOf")
-
-      // the store's ACTUAL creation, with no layout argument at all,
-      // adopts the staged choice — not DefaultLayout
-      CorpusStore.tick(docs.filter(col("doc_id") % 7 === 1), root,
-        tickId = Some("w1"))
-      assert(ManifestTable.currentVersion(spark, root).contains(1L))
-      assert(CorpusStore.layoutOf(spark, root) == chosen,
-        "creation without layoutIfNew discarded the staged choice")
-      // and the files really sit in dirs of the chosen layout
-      KindCols.foreach { case (kind, _) =>
-        kindRows(root, kind).foreach { rows =>
-          assert(rows.filter(bucketExpr(kind, chosen) =!=
-            col("p_b").cast("int")).isEmpty,
-            s"$kind files landed in dirs foreign to the staged layout")
-        }
-      }
-      // asserting a different layout on the now-existing store throws
-      intercept[IllegalArgumentException] {
-        CorpusStore.tick(docs.filter(col("doc_id") % 7 === 2), root,
-          layoutIfNew = Some(StoreLayout(8, 8, 8)))
-      }
-    } finally spark.catalog.clearCache()
-  }
-
   test("marker housekeeping's clock probe never appears as a tick id") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val root = java.nio.file.Files.createTempDirectory("graft_layclk").toString
@@ -378,38 +289,6 @@ class CorpusStoreLayoutSpec extends SparkSpec {
       val clk = new java.io.File(s"$root/_clock")
       assert(!clk.exists || clk.listFiles.isEmpty,
         "clock-probe file left behind")
-    } finally spark.catalog.clearCache()
-  }
-
-  test("a raced-away current-version layout sidecar walks back to the " +
-    "previous version's identical layout, never to the default") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val lay = StoreLayout(32, 32, 32)
-    val root = java.nio.file.Files.createTempDirectory("graft_laywb").toString
-    try {
-      CorpusStore.tick(docs.filter(col("doc_id") % 7 === 0), root,
-        tickId = Some("w0"), minQuality = 0.0, layoutIfNew = Some(lay))
-      CorpusStore.tick(docs.filter(col("doc_id") % 7 === 1), root,
-        tickId = Some("w1"), minQuality = 0.0)
-      val v = ManifestTable.currentVersion(spark, root).get
-      assert(v >= 2, s"expected two commits, got $v")
-      // the race: concurrent version-dir pruning deleted the sidecar the
-      // current version just wrote. Layouts change only at compact time,
-      // so the previous retained version's sidecar is identical — the
-      // resolution must walk back to it, not silently revert to the
-      // 16-bucket default (= wrong dirs = missed duplicates)
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(fs.delete(new org.apache.hadoop.fs.Path(s"$root/_layout/v$v"),
-        false), "current-version sidecar unexpectedly absent")
-      assert(CorpusStore.layoutOf(spark, root) == lay,
-        "layout silently reverted to the default after a raced sidecar")
-      // the store still functions under the walked-back layout: a
-      // semantic replay of an ingested wave commits nothing
-      val rep = CorpusStore.tick(docs.filter(col("doc_id") % 7 === 1), root,
-        minQuality = 0.0)
-      assert(rep.nKept == 0L,
-        s"replay under the walked-back layout was not a no-op: $rep")
     } finally spark.catalog.clearCache()
   }
 
